@@ -13,11 +13,21 @@ import scala.concurrent.duration._
   */
 sealed trait SinkConfig {
   def region: String
+  def streamName: String
   def batchSize: Int
   def maxRetries: Int
   def timeout: FiniteDuration
   def backoffInit: FiniteDuration
   def backoffMax: FiniteDuration
+
+  /** The checks both shapes share (streams/config.go:41-59,
+    * firehose/config.go:37-51), in the reference's order. */
+  protected def sharedError: Option[String] =
+    if (region.isEmpty) Some("region is not defined")
+    else if (streamName.isEmpty) Some("stream_name is not defined")
+    else if (batchSize > StreamsConfig.MaxBatchSize || batchSize < 1)
+      Some(s"invalid batch size: $batchSize (must be in [1, ${StreamsConfig.MaxBatchSize}])")
+    else None
 }
 
 /** Kinesis-Streams-shaped sink config (streams/config.go:8-17).
@@ -36,13 +46,8 @@ final case class StreamsConfig(
 
   /** streams/config.go:41-59 + provider check at streams/client.go:49-55. */
   def validate: Either[String, StreamsConfig] =
-    if (region.isEmpty) Left("region is not defined")
-    else if (streamName.isEmpty) Left("stream_name is not defined")
-    else if (batchSize > StreamsConfig.MaxBatchSize || batchSize < 1)
-      Left(s"invalid batch size: $batchSize (must be in [1, ${StreamsConfig.MaxBatchSize}])")
-    else if (partitionKeyProvider != "" && partitionKeyProvider != "xid")
-      Left(s"invalid partition key provider: $partitionKeyProvider")
-    else Right(this)
+    sharedError.orElse(Option.when(partitionKeyProvider != "" && partitionKeyProvider != "xid")(
+      s"invalid partition key provider: $partitionKeyProvider")).toLeft(this)
 }
 
 object StreamsConfig {
@@ -59,32 +64,17 @@ object StreamsConfig {
     * 8-17; the nested backoff block flattens to `backoff.init`/`backoff.max`).
     * Shared by the DSv2 option parsing (GraftStreamsProvider) so the
     * format("graft-streams") route and programmatic construction have
-    * identical semantics. */
-  private val knownKeys = Set("region", "stream_name", "partition_key",
-    "partition_key_provider", "batch_size", "max_retries", "timeout",
-    "backoff.init", "backoff.max")
-
-  /** @param tolerate extra keys the caller owns (e.g. the DSv2 route's
+    * identical semantics.
+    *
+    * @param tolerate extra keys the caller owns (e.g. the DSv2 route's
     *   `putter.class` and Spark-injected infrastructure options); everything
     *   else outside the reference's config tags is a config ERROR, so a
     *   typo'd key (`batchsize`) cannot silently fall back to the default. */
   def fromOptions(options: Map[String, String],
       tolerate: String => Boolean = _ => false): Either[String, StreamsConfig] =
-    for {
-      _ <- Configs.noUnknownKeys(options, knownKeys, tolerate)
-      bs <- Configs.intOpt(options, "batch_size", DefaultBatchSize)
-      mr <- Configs.intOpt(options, "max_retries", 3)
-      to <- Configs.durationOpt(options, "timeout", 90.seconds)
-      bi <- Configs.durationOpt(options, "backoff.init", 1.second)
-      bm <- Configs.durationOpt(options, "backoff.max", 60.seconds)
-      cfg <- StreamsConfig(
-        region = options.getOrElse("region", ""),
-        streamName = options.getOrElse("stream_name", ""),
-        partitionKey = options.getOrElse("partition_key", ""),
-        partitionKeyProvider = options.getOrElse("partition_key_provider", ""),
-        batchSize = bs, maxRetries = mr, timeout = to,
-        backoffInit = bi, backoffMax = bm).validate
-    } yield cfg
+    Configs.unpack(options, Set("partition_key", "partition_key_provider"), tolerate)(
+      StreamsConfig(_, _, options.getOrElse("partition_key", ""),
+        options.getOrElse("partition_key_provider", ""), _, _, _, _, _)).flatMap(_.validate)
 }
 
 /** Firehose-shaped sink config (firehose/config.go:8-15; no partition key). */
@@ -98,38 +88,40 @@ final case class FirehoseConfig(
     backoffMax: FiniteDuration = 60.seconds) extends SinkConfig {
 
   /** firehose/config.go:37-51. */
-  def validate: Either[String, FirehoseConfig] =
-    if (region.isEmpty) Left("region is not defined")
-    else if (streamName.isEmpty) Left("stream_name is not defined")
-    else if (batchSize > StreamsConfig.MaxBatchSize || batchSize < 1)
-      Left(s"invalid batch size: $batchSize (must be in [1, ${StreamsConfig.MaxBatchSize}])")
-    else Right(this)
+  def validate: Either[String, FirehoseConfig] = sharedError.toLeft(this)
 }
 
 object FirehoseConfig {
   /** Untyped front end for the firehose shape — same unpack-onto-defaults
     * semantics as [[StreamsConfig.fromOptions]] (firehose/firehose.go:22-29). */
-  private val knownKeys = Set("region", "stream_name", "batch_size",
-    "max_retries", "timeout", "backoff.init", "backoff.max")
-
   def fromOptions(options: Map[String, String],
       tolerate: String => Boolean = _ => false): Either[String, FirehoseConfig] =
-    for {
-      _ <- Configs.noUnknownKeys(options, knownKeys, tolerate)
-      bs <- Configs.intOpt(options, "batch_size", StreamsConfig.DefaultBatchSize)
-      mr <- Configs.intOpt(options, "max_retries", 3)
-      to <- Configs.durationOpt(options, "timeout", 90.seconds)
-      bi <- Configs.durationOpt(options, "backoff.init", 1.second)
-      bm <- Configs.durationOpt(options, "backoff.max", 60.seconds)
-      cfg <- FirehoseConfig(
-        region = options.getOrElse("region", ""),
-        streamName = options.getOrElse("stream_name", ""),
-        batchSize = bs, maxRetries = mr, timeout = to,
-        backoffInit = bi, backoffMax = bm).validate
-    } yield cfg
+    Configs.unpack(options, Set.empty, tolerate)(FirehoseConfig(_, _, _, _, _, _, _))
+      .flatMap(_.validate)
 }
 
 private[config] object Configs {
+  /** The unpack both shapes share: reject unknown keys, then read the
+    * shared fields onto their defaults and hand them, in SinkConfig's field
+    * order (region, stream_name, batch_size, max_retries, timeout,
+    * backoff.init, backoff.max), to `build`. `extraKeys` are the shape's own
+    * config tags, which `build` reads itself. */
+  def unpack[C](options: Map[String, String], extraKeys: Set[String],
+      tolerate: String => Boolean)(build: (String, String, Int, Int,
+      FiniteDuration, FiniteDuration, FiniteDuration) => C): Either[String, C] =
+    for {
+      _ <- noUnknownKeys(options, sharedKeys ++ extraKeys, tolerate)
+      bs <- intOpt(options, "batch_size", StreamsConfig.DefaultBatchSize)
+      mr <- intOpt(options, "max_retries", 3)
+      to <- durationOpt(options, "timeout", 90.seconds)
+      bi <- durationOpt(options, "backoff.init", 1.second)
+      bm <- durationOpt(options, "backoff.max", 60.seconds)
+    } yield build(options.getOrElse("region", ""), options.getOrElse("stream_name", ""),
+      bs, mr, to, bi, bm)
+
+  private val sharedKeys = Set("region", "stream_name", "batch_size",
+    "max_retries", "timeout", "backoff.init", "backoff.max")
+
   /** Integer option with inject-default-only-if-unset; a present-but-invalid
     * value is a config ERROR (Left), not a silent default. */
   def intOpt(options: Map[String, String], key: String, dflt: Int): Either[String, Int] =

@@ -23,15 +23,14 @@ import org.apache.spark.sql.types.StructType
   */
 object Ndjson {
 
-  /** Serialize all columns of `df` to an NDJSON `data` column (P1/P2). */
-  def encode(df: DataFrame): DataFrame =
-    df.select(concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"))
+  /** The NDJSON `data` column of a record: `columns` as one compact JSON
+    * object plus a trailing '\n' (P1/P2) — the payload of both delivery
+    * shapes. */
+  def data(columns: Seq[String]): Column =
+    concat(to_json(struct(columns.map(col): _*)), lit("\n")).as("data")
 
-  /** Streams-shaped record: (data, partition_key) — P1 + K1/K2. */
-  def encodeKeyed(df: DataFrame, key: Column): DataFrame =
-    df.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"),
-      key.cast("string").as("partition_key"))
+  /** Serialize all columns of `df` to an NDJSON `data` column (P1/P2). */
+  def encode(df: DataFrame): DataFrame = df.select(data(df.columns.toIndexedSeq))
 
   /** Decode side (S2): parse NDJSON lines in PERMISSIVE mode, splitting
     * parse failures onto a dropped side-output — the engine twin of

@@ -1,6 +1,9 @@
 package graft.sink
 
-import graft.config.SinkConfig
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.config.{SinkConfig, StreamsConfig}
+import org.apache.spark.sql.types.StructType
 import scala.concurrent.duration._
 
 /** The Kinesis/Firehose-shaped delivery machinery — the Spark twin of the
@@ -33,9 +36,9 @@ import scala.concurrent.duration._
   * `kinesisStreamsClient` interface (streams/client.go:27-29), which is what
   * the ported delivery-semantics test matrix stubs (BatchPutSpec).
   *
-  * Scale: one client per executor partition ([[KinesisShapedSink.write]]) —
-  * the driver never sees a record; throughput scales with partition count and
-  * the per-call cap matches the service contract.
+  * Scale: one client per executor partition ([[RecordWriter]]) — the driver
+  * never sees a record; throughput scales with partition count and the
+  * per-call cap matches the service contract.
   */
 object BatchPut {
 
@@ -138,27 +141,50 @@ object BatchPut {
   }
 }
 
-/** foreachBatch/foreachPartition wiring: the executor-side writer (O1/O2).
-  * `newPutter` is a serializable factory so each partition builds its own
-  * service client (no driver round-trip, no shared connection). */
+/** The one task-side writer of the sink, driven by both entry points: the
+  * foreachBatch route ([[KinesisShapedSink.write]]) and the `graft-streams`
+  * DSv2 `DataWriter`. It owns one partition's service client, turns each row
+  * into a [[BatchPut.Record]] and hands every [[StreamsConfig.MaxBatchSize]]
+  * records (and the rest on [[flush]]) to [[BatchPut.publish]], which chunks
+  * them to `cfg.batchSize`. A null partition key is sent as "", the firehose
+  * shape's key: a real SDK fails a whole call on a null key. */
+final class RecordWriter(putter: BatchPut.Putter, cfg: SinkConfig) {
+  private val buf = scala.collection.mutable.ArrayBuffer.empty[BatchPut.Record]
+
+  def write(data: Array[Byte], key: String): Unit = {
+    buf += BatchPut.Record(data, if (key == null) "" else key)
+    if (buf.length >= StreamsConfig.MaxBatchSize) flush()
+  }
+
+  def flush(): Unit =
+    if (buf.nonEmpty) { BatchPut.publish(putter, cfg, buf.toSeq); buf.clear() }
+
+  def discard(): Unit = buf.clear()
+}
+
+object RecordWriter {
+  /** Positions of the input's `data STRING` column and of its optional
+    * `partition_key STRING` column (-1 when absent). */
+  def columns(schema: StructType): (Int, Int) = (schema.fieldIndex("data"),
+    if (schema.fieldNames.contains("partition_key")) schema.fieldIndex("partition_key") else -1)
+}
+
+/** The foreachBatch entry point of the sink (O1/O2). `newPutter` is a
+  * serializable factory so each partition builds its own service client (no
+  * driver round-trip, no shared connection). */
 object KinesisShapedSink extends Serializable {
-  import BatchPut._
 
   /** Write a (data: string, partition_key: string) DataFrame through the
     * delivery machinery, one client per partition. Returns nothing — stats
     * surface through `observe()`/listeners in the streaming wiring. */
   def write(df: org.apache.spark.sql.DataFrame, cfg: SinkConfig,
-      newPutter: () => Putter): Unit = {
-    val hasKey = df.columns.contains("partition_key")
+      newPutter: () => BatchPut.Putter): Unit = {
+    val (dataIdx, keyIdx) = RecordWriter.columns(df.schema)
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      val putter = newPutter()
-      rows.grouped(graft.config.StreamsConfig.MaxBatchSize).foreach { group =>
-        val recs = group.map { r =>
-          Record(r.getAs[String]("data").getBytes("UTF-8"),
-            if (hasKey) r.getAs[String]("partition_key") else "")
-        }
-        BatchPut.publish(putter, cfg, recs)
-      }
+      val writer = new RecordWriter(newPutter(), cfg)
+      rows.foreach(r => writer.write(r.getString(dataIdx).getBytes(UTF_8),
+        if (keyIdx >= 0) r.getString(keyIdx) else null))
+      writer.flush()
     }
   }
 }

@@ -29,9 +29,7 @@ import scala.jdk.CollectionConverters._
   * service-loader file. Input schema: `data STRING` (NDJSON payload) plus an
   * optional `partition_key STRING`. Each task partition builds its own
   * putter (one service client per executor core — no driver round-trip) and
-  * routes rows through [[BatchPut.publish]], so the DSv2 path and the
-  * `foreachBatch` path share the identical delivery semantics (chunking,
-  * failed-subset retry, backoff, at-least-once).
+  * writes its rows through the sink's one task-side [[RecordWriter]].
   *
   * The putter is configured by class name (`putter.class`, a no-arg
   * constructor implementing [[BatchPut.Putter]]) because DSv2 options are
@@ -82,9 +80,7 @@ private class GraftStreamsTable(schema0: StructType) extends Table with Supports
     val cfg = GraftStreamsProvider.configFrom(options) // validate at plan time (≈ outputs.Fail)
     val putterClass = options.getOrElse("putter.class",
       throw new IllegalArgumentException("putter.class option is required"))
-    val dataIdx = info.schema().fieldIndex("data")
-    val keyIdx = if (info.schema().fieldNames.contains("partition_key"))
-      info.schema().fieldIndex("partition_key") else -1
+    val (dataIdx, keyIdx) = RecordWriter.columns(info.schema())
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
@@ -96,26 +92,18 @@ private class GraftStreamsTable(schema0: StructType) extends Table with Supports
   }
 }
 
-/** Task-side writer: accumulates the partition's rows into ≤batch-size
-  * chunks and publishes on commit — mirroring `Publish(batch)`'s unit of
-  * work. Epoch/commit metadata gives at-least-once on replay (E3). */
+/** DSv2 task-side adapter over [[RecordWriter]]; publishing the rest on
+  * commit mirrors `Publish(batch)`'s unit of work. Epoch/commit metadata gives
+  * at-least-once on replay (E3). */
 private class GraftDataWriter(cfg: StreamsConfig, putterClass: String,
     dataIdx: Int, keyIdx: Int) extends DataWriter[InternalRow] {
-  private val putter = GraftStreamsProvider.newPutter(putterClass)
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[BatchPut.Record]
+  private val writer = new RecordWriter(GraftStreamsProvider.newPutter(putterClass), cfg)
 
-  override def write(row: InternalRow): Unit = {
-    val data = row.getUTF8String(dataIdx).getBytes
-    val key = if (keyIdx >= 0 && !row.isNullAt(keyIdx))
-      row.getUTF8String(keyIdx).toString else ""
-    buf += BatchPut.Record(data, key)
-    if (buf.length >= StreamsConfig.MaxBatchSize) flush()
-  }
-  private def flush(): Unit = {
-    if (buf.nonEmpty) { BatchPut.publish(putter, cfg, buf.toSeq); buf.clear() }
-  }
-  override def commit(): WriterCommitMessage = { flush(); GraftCommit }
-  override def abort(): Unit = buf.clear()
+  override def write(row: InternalRow): Unit =
+    writer.write(row.getUTF8String(dataIdx).getBytes,
+      if (keyIdx >= 0 && !row.isNullAt(keyIdx)) row.getUTF8String(keyIdx).toString else null)
+  override def commit(): WriterCommitMessage = { writer.flush(); GraftCommit }
+  override def abort(): Unit = writer.discard()
   override def close(): Unit = ()
 }
 

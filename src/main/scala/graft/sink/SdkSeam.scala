@@ -36,7 +36,9 @@ package graft.sink
   * [[KinesisShapedSink.write]] / `Pipeline.toKinesisShapedSink`, or
   * `putter.class=com.example.KinesisPutter` for the DSv2
   * `format("graft-streams")` path (needs the no-arg-constructor variant
-  * reading region/stream from system properties or a config file).
+  * reading region/stream from system properties or a config file). Both
+  * routes hand the putter records from the same [[RecordWriter]], so
+  * `r.key` is never null.
   *
   * Credentials/timeout: the SDK default chain handles credentials on a real
   * cluster (instance profile / IRSA); set the client's apiCallTimeout to

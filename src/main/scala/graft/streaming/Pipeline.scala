@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.config.StreamsConfig
+import graft.config.{FirehoseConfig, SinkConfig, StreamsConfig}
 import graft.encode.Ndjson
 import graft.keys.PartitionKeys
 import graft.sink.{BatchPut, KinesisShapedSink}
@@ -84,7 +84,9 @@ object Pipeline {
   }
 
   /** The full publish transform (P1 + K1/K2 + F2): encode NDJSON, attach the
-    * configured partition key, split off key-failures. Returns
+    * configured partition key, split off key-failures (streams/client.go:
+    * 148-151) onto a side output kept for audit instead of silently
+    * vanishing (SURVEY §4.3 "dropped-event side channel"). Returns
     * (records, dropped) — records are (data, partition_key). */
   def publishTransform(df: DataFrame, cfg: StreamsConfig): (DataFrame, DataFrame) = {
     val key = PartitionKeys.forConfig(cfg, df.schema)
@@ -95,26 +97,17 @@ object Pipeline {
     val dropped = keyed.filter(col("partition_key").isNull)
     // payload = the event's own columns; the key rides alongside, not inside
     // (streams/client.go:153 — {Data, PartitionKey}).
-    val records = ok.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"),
-      col("partition_key"))
-    (records, dropped)
+    (ok.select(Ndjson.data(df.columns.toIndexedSeq), col("partition_key")), dropped)
   }
 
-  /** Wire a keyed-record stream into the Kinesis-shaped sink with a
-    * processing-time trigger (the flush.timeout twin) and checkpointing
-    * (the ACK/registrar twin). `newPutter` must be serializable.
-    *
-    * `partitionByKey = true` hash-repartitions on the partition key before
-    * the sink — the engine-side analogue of Kinesis shard routing (SURVEY
-    * §2.4 K1): all records of a key flow through one task in arrival order,
-    * reproducing per-shard ordering. Costs a shuffle; leave off when the
-    * sink's own key-hashing (the real Kinesis) is the routing authority. */
-  def toKinesisShapedSink(records: DataFrame, cfg: StreamsConfig,
+  /** Wire a record stream — keyed (streams) or data-only (firehose) — into
+    * the Kinesis-shaped sink with a processing-time trigger (the
+    * flush.timeout twin) and checkpointing (the ACK/registrar twin).
+    * `newPutter` must be serializable. */
+  def toKinesisShapedSink(records: DataFrame, cfg: SinkConfig,
       newPutter: () => BatchPut.Putter, checkpointDir: String,
-      trigger: FiniteDuration, partitionByKey: Boolean = false): DataStreamWriter[Row] =
-    (if (partitionByKey) records.repartition(col("partition_key")) else records)
-      .writeStream
+      trigger: FiniteDuration): DataStreamWriter[Row] =
+    records.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(trigger.toMillis))
@@ -126,9 +119,7 @@ object Pipeline {
     * (firehose/client.go:111-137; the sink record is {Data} only,
     * firehose/client.go:136). Encode-failures were already dropped at parse
     * time (F1), matching mapEvents' fold. */
-  def firehoseTransform(df: DataFrame): DataFrame =
-    df.select(
-      concat(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), lit("\n")).as("data"))
+  def firehoseTransform(df: DataFrame): DataFrame = Ndjson.encode(df)
 
   /** O2 terminal twin: the reference's firehose delivers onward to
     * S3-as-NDJSON for Athena (streams/client.go:140-144 documents the
@@ -151,18 +142,12 @@ object Pipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(trigger.toMillis))
 
-  /** O2: wire an unkeyed record stream into the firehose-shaped sink — same
-    * chunk/retry/backoff machinery, records carry an empty key. */
-  def toFirehoseShapedSink(records: DataFrame, cfg: graft.config.FirehoseConfig,
+  /** O2: wire an unkeyed record stream into the firehose-shaped sink — the
+    * same sink as [[toKinesisShapedSink]]; records carry an empty key. */
+  def toFirehoseShapedSink(records: DataFrame, cfg: FirehoseConfig,
       newPutter: () => BatchPut.Putter, checkpointDir: String,
       trigger: FiniteDuration): DataStreamWriter[Row] =
-    records.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(trigger.toMillis))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        KinesisShapedSink.write(batch, cfg, newPutter)
-      }
+    toKinesisShapedSink(records, cfg, newPutter, checkpointDir, trigger)
 
   // ------------------------------------------------------------------
   // Streaming semantics beyond the reference (SURVEY §2.8 streaming row):

@@ -1,24 +1,28 @@
 package graft
 
 import graft.config.StreamsConfig
-import graft.sink.BatchPut
+import graft.sink.{BatchPut, KinesisShapedSink}
 import graft.streaming.Pipeline
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 /** No-arg-constructible putter for the DSv2 `putter.class` option — the
   * reflective twin of the reference's injectable kinesisStreamsClient seam. */
 class RegistryPutter extends BatchPut.Putter {
   def put(records: Seq[BatchPut.Record]): Seq[BatchPut.PutResult] = {
+    RegistryPutter.calls.add(records.size)
     records.foreach(RegistryPutter.got.add)
     records.map(_ => BatchPut.PutResult(None))
   }
 }
 object RegistryPutter {
   val got = new java.util.concurrent.ConcurrentLinkedQueue[BatchPut.Record]()
+  /** Records per put call, in call order. */
+  val calls = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
 }
 
 /** DataSource V2 sink registration spec (SURVEY §2.5 O3): the short name
@@ -66,6 +70,36 @@ class DsV2SinkSpec extends SparkSpec {
     val recs = RegistryPutter.got.toArray(Array.empty[BatchPut.Record])
     assert(recs.length == 3)
     assert(recs.map(_.key).count(_ == "k1") == 2)
+  }
+
+  test("DSv2 and foreachBatch entry points put the same records in the same calls") {
+    // one partition of 1 234 rows: two full 500-record buffers and a rest;
+    // every 7th row has a null key, which both routes send as ""
+    val n = 1234
+    val df = (0 until n).map(i => (s"{\"n\":$i}\n", if (i % 7 == 0) null else s"k${i % 13}"))
+      .toDF("data", "partition_key").coalesce(1)
+    def delivered(run: => Unit): (Map[(String, String), Int], Seq[Int]) = {
+      RegistryPutter.got.clear(); RegistryPutter.calls.clear()
+      run
+      (RegistryPutter.got.asScala.toSeq
+        .groupBy(r => (new String(r.data, "UTF-8"), r.key)).view.mapValues(_.size).toMap,
+        RegistryPutter.calls.asScala.toSeq)
+    }
+    for (bs <- Seq(50, 500)) {
+      val dsv2 = delivered(df.write.format("graft-streams")
+        .option("region", "us-east-1").option("stream_name", "t")
+        .option("batch_size", bs.toString)
+        .option("putter.class", classOf[RegistryPutter].getName)
+        .mode("append").save())
+      val foreachBatch = delivered(KinesisShapedSink.write(df,
+        StreamsConfig("us-east-1", "t", batchSize = bs), () => new RegistryPutter))
+      assert(foreachBatch == dsv2, s"batch_size $bs")
+      val (records, calls) = dsv2
+      assert(records.values.sum == n && records.values.forall(_ == 1))
+      assert(records.keys.count(_._2 == "") == (0 until n).count(_ % 7 == 0))
+      val perBuffer = Seq(500, 500, n - 1000).map(b => Seq.fill(b / bs)(bs) ++ Seq(b % bs).filter(_ > 0))
+      assert(calls == perBuffer.flatten, s"batch_size $bs")
+    }
   }
 
   test("invalid options fail at plan time like outputs.Fail") {

@@ -3,6 +3,8 @@ package graft
 import graft.encode.Ndjson
 import graft.keys.PartitionKeys
 import graft.config.StreamsConfig
+import graft.streaming.Pipeline
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,9 +21,10 @@ class NdjsonSpec extends SparkSpec {
     assert(out.head == """{"message":"boom","n":1}""" + "\n")
   }
 
-  test("encodeKeyed: (data, partition_key) record shape") {
+  test("publishTransform: (data, partition_key) record shape") {
     val df = Seq(("boom", "k1")).toDF("message", "part")
-    val row = Ndjson.encodeKeyed(df, col("part")).collect().head
+    val row = Pipeline.publishTransform(df, StreamsConfig("r", "s", partitionKey = "part"))
+      ._1.collect().head
     assert(row.getAs[String]("data") == """{"message":"boom","part":"k1"}""" + "\n")
     assert(row.getAs[String]("partition_key") == "k1")
   }
@@ -52,14 +55,18 @@ class NdjsonSpec extends SparkSpec {
 }
 
 /** Port of the partition-key provider tests
-  * (streams/client_test.go:32-62, streams/partition_key_test.go:10-21). */
+  * (streams/client_test.go:32-62, streams/partition_key_test.go:10-21). The
+  * F2 key-failure split is checked on the production transform. */
 class PartitionKeySpec extends SparkSpec {
   import spark.implicits._
 
+  /** (publishable, dropped) of the field provider keyed on `path`. */
+  private def split(df: DataFrame, path: String): (DataFrame, DataFrame) =
+    Pipeline.publishTransform(df, StreamsConfig("r", "s", partitionKey = path))
+
   test("field provider: string field value becomes the key") {
     val df = Seq(("v1", 1L), ("v2", 2L)).toDF("mykey", "n")
-    val key = PartitionKeys.fieldKey(df.schema, "mykey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = split(df, "mykey")
     assert(ok.select("partition_key").as[String].collect().sorted.toSeq == Seq("v1", "v2"))
     assert(dropped.count() == 0)
   }
@@ -73,22 +80,19 @@ class PartitionKeySpec extends SparkSpec {
 
   test("field provider: non-string field -> dropped (no implicit cast)") {
     val df = Seq((7L, "x")).toDF("numkey", "payload")
-    val key = PartitionKeys.fieldKey(df.schema, "numkey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = split(df, "numkey")
     assert(ok.count() == 0 && dropped.count() == 1)
   }
 
   test("field provider: missing field -> dropped") {
     val df = Seq(("x", 1L)).toDF("a", "n")
-    val key = PartitionKeys.fieldKey(df.schema, "no.such.field")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = split(df, "no.such.field")
     assert(ok.count() == 0 && dropped.count() == 1)
   }
 
   test("field provider: null value at runtime -> dropped") {
     val df = Seq(Some("k"), None).map(v => Tuple1(v.orNull)).toDF("mykey")
-    val key = PartitionKeys.fieldKey(df.schema, "mykey")
-    val (ok, dropped) = PartitionKeys.split(df, key)
+    val (ok, dropped) = split(df, "mykey")
     assert(ok.count() == 1 && dropped.count() == 1)
   }
 
